@@ -1084,76 +1084,6 @@ def _measure_streaming(
     return best
 
 
-def _bench_uuid_ab(spark) -> dict:
-    """Round-6 verdict item 4: anchor the generator's UUID-derivation
-    cost in-session. Three variants over the same 16M-row range, 3 UUID
-    columns each:
-
-    - ``coupled``: ONE shared md5 pool for all three columns — the
-      pre-round-6 bug shape (user_id == page_id == ad_id byte-identical,
-      Catalyst CSE collapses the three md5s to one). The speed-of-light
-      reference for this shape, kept ONLY as a measurement.
-    - ``salted``: production (generator.expr_for) — each column salts
-      the md5 with its own name, three independent pools, 3 md5s/row.
-      The gap vs ``coupled`` is the measured correctness price.
-    - ``rotated``: candidate cheaper decorrelation — one shared md5 +
-      a per-column rotation of the 32-hex digest (2 substrings + concat
-      per column; CSE keeps the single md5). Pools stay byte-distinct
-      and 1M-cardinality, but each column is a bijection of the shared
-      digest rather than an independent pool; adopt only if the win is
-      real and the distribution tests stay green. (First recorded run:
-      rotated LOST to salted — the per-column substring/concat reshapes
-      cost more than the two md5s they save, consistent with the r6
-      one-md5-plus-bijection measurements — so production keeps the
-      salted independent pools and this stays a measurement.)
-    """
-    from pyspark.sql import functions as F
-
-    from culvert_spark import generator as g
-
-    n = 16_000_000
-    rng = spark.range(0, n, 1, int(CPUS))
-    idx = g._pool_idx(F.col("id"))
-    cols = ("user_id", "page_id", "ad_id")
-
-    hx = F.md5(
-        F.concat(F.lit("uuid42|shared|"), idx.cast("string")).cast("binary")
-    )
-
-    def rot(k: int):
-        r = F.concat(F.substring(hx, k + 1, 32 - k), F.substring(hx, 1, k))
-        return F.concat_ws(
-            "-",
-            F.substring(r, 1, 8),
-            F.substring(r, 9, 4),
-            F.substring(r, 13, 4),
-            F.substring(r, 17, 4),
-            F.substring(r, 21, 12),
-        )
-
-    dfs = {
-        "coupled": rng.select(
-            *[g._uuid_shaped(idx, 42, "uuid").alias(c) for c in cols]
-        ),
-        "salted": rng.select(
-            *[g._uuid_shaped(idx, 42, c).alias(c) for c in cols]
-        ),
-        "rotated": rng.select(
-            *[rot(11 * i).alias(c) for i, c in enumerate(cols)]
-        ),
-    }
-    out: dict = {"n_rows": n}
-    for name, df in dfs.items():
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            start = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - start)
-        out[f"{name}_sec"] = round(best, 3)
-    return out
-
-
 def _bench_incdedup_amortization(spark, registry) -> dict:
     """Round-6 verdict item 7: record the signature-store amortization
     claim as numbers — build the base signature table ONCE (persisted to
@@ -1254,11 +1184,11 @@ def main() -> None:
     # EARLY batch-ingest measurement in the SAME quiet window (round-8
     # verdict item 5): the r8 record showed batch ingest dipping
     # 3.17M -> 2.76M rows/s cross-session with no in-session anchor to
-    # pin it on noise the way uuid_ab pins its deltas. Measured here —
-    # right after the early streaming run, before queries/sf_large churn
-    # the page cache — and again at the canonical late position below;
-    # agreement attributes round-over-round ingest deltas to host noise,
-    # an early surplus to session aging. A sync barrier afterwards keeps
+    # pin it on noise. Measured here — right after the early streaming
+    # run, before queries/sf_large churn the page cache — and again at
+    # the canonical late position below; agreement attributes
+    # round-over-round ingest deltas to host noise, an early surplus to
+    # session aging. A sync barrier afterwards keeps
     # the dirty ORC pages from depressing the headline section.
     import shutil
     import tempfile
@@ -1422,13 +1352,8 @@ def main() -> None:
     except Exception as exc:  # pragma: no cover - defensive
         crawl = {"error": f"{type(exc).__name__}: {exc}"[:200]}
 
-    # Generator UUID-derivation A/B and the incremental-dedup
-    # amortization numbers (round-6 verdict items 4 and 7) — same
-    # defensive posture.
-    try:
-        uuid_ab = _bench_uuid_ab(spark)
-    except Exception as exc:  # pragma: no cover - defensive
-        uuid_ab = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+    # Incremental-dedup amortization numbers (round-6 verdict item 7) —
+    # same defensive posture.
     try:
         incdedup = _bench_incdedup_amortization(spark, registry)
     except Exception as exc:  # pragma: no cover - defensive
@@ -1538,7 +1463,6 @@ def main() -> None:
                 "html_scaling": html_scaling,
                 "crawl": crawl,
                 "sessionize_threshold_ab": sessionize_ab,
-                "uuid_derivation_ab": uuid_ab,
                 "incdedup_amortization": incdedup,
                 "stream_sink_ab": sink_ab,
                 "ingest_mode": (
@@ -1608,11 +1532,6 @@ def main() -> None:
         for k in ("rows", "single_sec", "two_level_sec", "auto_picks",
                   "error")
         if k in sessionize_ab
-    }
-    uuid_compact = {
-        k: uuid_ab.get(k)
-        for k in ("coupled_sec", "salted_sec", "rotated_sec", "error")
-        if k in uuid_ab
     }
     sink_ab_compact = {
         k: sink_ab.get(k)
@@ -1699,7 +1618,6 @@ def main() -> None:
             },
         ),
         ("sessionize_ab", sess_compact),
-        ("uuid_ab", uuid_compact),
         ("stream_sink_ab", sink_ab_compact),
         ("incdedup_amortization", incdedup),
         # Round-8 verdict item 5: the two cross-session dips get

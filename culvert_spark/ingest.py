@@ -335,14 +335,12 @@ def run_streaming_ingest(
     readers exactly like an open Hive txn, and checkpoint + manifest give
     exactly-once across restarts (SURVEY §7.2). ``sink="foreachBatch"``
     keeps the explicit per-batch batch-write body for formats with no
-    streaming file sink; it commits through FileOutputCommitter v1 whose
-    per-batch setup + task-rename + sequential job-commit pass is the
-    measured difference between the two (in-session A/B, 32 streams,
-    3M-row batches, ORC, 30 s windows: file sink 3.32M rows/s steady
-    median with addBatch 832 ms vs foreachBatch 2.28-2.62M rows/s with
-    addBatch 1013-1541 ms — +27-45%; committer v2 and
-    spark.sql.maxConcurrentOutputFileWriters moved nothing, so the cost is
-    the commit protocol itself, not the dynamic-partition sort).
+    streaming file sink; it commits through FileOutputCommitter v1 (job
+    setup, task renames, job commit per batch). The bench's in-session
+    ``stream_sink_ab`` has the two sinks within a few percent (r14: file
+    2.269M vs foreachBatch 2.259M rows/s at 32 streams, 986k vs 947k at
+    8), so the file sink is the default for its reader-visible atomic
+    manifest, not for speed.
 
     Scale posture: committed throughput tracks source parallelism —
     in-session sweep at a constant 187.5k rows per stream-txn measured
@@ -350,7 +348,11 @@ def run_streaming_ingest(
     streams (near-linear until the 32 local cores saturate). Parallelism
     is P source partitions of ONE query, so on a cluster P scales with
     executors while the per-batch driver work stays one manifest append +
-    two WAL writes (~75 ms measured) regardless of P.
+    two checkpoint log writes regardless of P. Phase medians at 4 streams
+    x 100k-row transactions (local[4], three runs): walCommit 6-13 ms and
+    commitOffsets 6-12 ms (with the FileSystem checkpoint manager set in
+    session.get_spark), queryPlanning 9-19 ms, against addBatch
+    312-547 ms of row generation, ORC write and manifest append.
     """
     del enable_auto_flush, streaming_optimizations, transaction_batch_size
     # Fused single-query design: nothing to stagger — P streams are P source

@@ -1884,8 +1884,8 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`culvert_spark.twolevel.sessionize_session_rows`, which probes
     the total row count (metadata-cheap — total rows exactly upper-bound
     any one user's rows) and, above that bound, the exact max rows per
-    user (round 14 — the precise largest partition a single window task
-    could be handed) and only engages the two-level plan — lag → gap
+    user (round 14 — the largest per-key unit a window task cannot
+    split) and only engages the two-level plan — lag → gap
     flag → running sum inside (user_id, day) sub-partitions, then a
     day-boundary merge over per-user session runs (structurally ≤ 48
     runs/day at a 30-min gap) — when a single window task could actually

@@ -85,6 +85,21 @@ def get_spark(
         # process (the driver's contract run), not in a process where a
         # tuned session was already exercised.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Streaming checkpoint and manifest writes (offset WAL, sink
+        # _spark_metadata entry, commit log: three per micro-batch) go
+        # through Spark's FileSystem-based manager instead of the default
+        # FileContext one. Without Hadoop's native library the FileContext
+        # path sets permissions by forking `chmod`, several times per
+        # atomic write. Measured per 100k-row transaction (local[4], 4
+        # streams): walCommit and commitOffsets medians 21-40 ms each
+        # before, 6-13 ms each after. Both managers write a temp file and
+        # rename it after an exists check, so the commit protocol and the
+        # on-disk layout are the same.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # Quieter local runs.
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -32,10 +32,11 @@ when a single key *could* pin a task, and total rows bound every key's
 rows exactly, so the probe can never miss a hot key. Above the total-row
 bound a second, still-exact probe measures the actual quantity the
 safety bound is about — the MAX rows of any one key, which IS the
-largest partition the single-window plan can hand one task — so
-hot-key-free corpora keep the cheaper single-exchange plan at any size
-(round-14; the round-13 driver bench measured the guard's standing
-premium at 33%/60% on a 24M-row hot-key-free input).
+largest per-key unit a window task cannot split (a task's total volume
+also depends on the shuffle partition count) — so hot-key-free corpora
+keep the cheaper single-exchange plan at any size (round-14; the
+round-13 driver bench measured the guard's standing premium at 33%/60%
+on a 24M-row hot-key-free input).
 """
 
 from __future__ import annotations
@@ -121,9 +122,9 @@ def _probe_memoized(df: DataFrame, memo, probe_key, compute):
 
 
 def _max_rows_per_key(df: DataFrame, key_col: str = "user_id") -> int:
-    """EXACT max rows owned by any single ``key_col`` value — the precise
-    size of the largest partition the single-window plan can hand one
-    task. One job: scan of the key column only, a combinable per-key
+    """EXACT max rows owned by any single ``key_col`` value — the largest
+    per-key unit a window task of the single-window plan cannot split.
+    One job: scan of the key column only, a combinable per-key
     count (partial aggregation collapses each map task's output to its
     distinct keys), one exchange of (key, count) partials, and a scalar
     max. Memoized per (session, file set, key column) like the count

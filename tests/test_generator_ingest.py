@@ -4,8 +4,11 @@ layout, and throughput-report arithmetic."""
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from culvert_spark import ingest
@@ -95,6 +98,37 @@ def test_uuid_columns_draw_from_independent_pools(spark):
     # Pool semantics retained: values repeat with period POOL_SIZE, so at
     # N << POOL_SIZE every row's draw is distinct within a column too.
     assert df.select("user_id").distinct().count() == N
+
+
+def _uuid_reference(seed: int, column: str, row_id: int) -> str:
+    """md5 hex of ``uuid<seed>|<column>|<row % 1M>`` split 8-4-4-4-12,
+    computed in pure Python."""
+    h = hashlib.md5(
+        f"uuid{seed}|{column}|{row_id % 1_000_000}".encode()
+    ).hexdigest()
+    return "-".join((h[:8], h[8:12], h[12:16], h[16:20], h[20:]))
+
+
+def test_uuid_kernel_matches_python_md5_reference(spark):
+    """Pins the byte-level UUID kernel to an independent hashlib
+    derivation on both sides of the 1M pool wrap, for two seeds."""
+    row_ids = (0, 1, 999_999, 1_000_000, 1_000_001, 7_654_321)
+    cols = ("user_id", "page_id", "ad_id")
+    for seed in (42, 7):
+        df = functools.reduce(
+            lambda a, b: a.unionAll(b),
+            [
+                generate(spark, 1, seed=seed, start_row=r, keep_row_id=True)
+                .select("row_id", *cols)
+                for r in row_ids
+            ],
+        )
+        got = {r.row_id: tuple(r[c] for c in cols) for r in df.collect()}
+        want = {
+            r: tuple(_uuid_reference(seed, c, r) for c in cols)
+            for r in row_ids
+        }
+        assert got == want, seed
 
 
 def test_determinism_across_parallelism(spark):
@@ -274,6 +308,119 @@ def test_streaming_ingest_restart_exactly_once(spark, tmp_path):
     shortfall = sum(actual.values()) - sum(reported.values())
     assert shortfall % 2_000 == 0, (shortfall, actual, reported)
     assert shortfall <= 2_000 * len(runs), (shortfall, actual, reported)
+
+
+def _log_ids(log_dir: str) -> list[int]:
+    """Batch ids present in a Spark metadata log directory (``N`` or
+    ``N.compact`` files; checksums and temp files skipped)."""
+    ids = []
+    for name in os.listdir(log_dir):
+        head = name.split(".")[0]
+        if head.isdigit() and not name.startswith("."):
+            ids.append(int(head))
+    return sorted(ids)
+
+
+def _drop_log_entries(log_dir: str, first_id: int) -> None:
+    """Remove every entry from batch ``first_id`` on (and its checksum),
+    as if those writes had never happened."""
+    for name in os.listdir(log_dir):
+        head = name.lstrip(".").split(".")[0]  # N, N.compact, .N.crc
+        if head.isdigit() and int(head) >= first_id:
+            os.remove(os.path.join(log_dir, name))
+
+
+@pytest.mark.parametrize(
+    "crash_point", ["before_commit_log", "before_manifest"]
+)
+def test_streaming_ingest_crash_window_recovers_exactly_once(
+    spark, tmp_path, crash_point
+):
+    """A micro-batch commits in three durable steps: data files, the sink's
+    _spark_metadata entry, then the checkpoint's commit-log entry. Simulate
+    a crash between them by deleting the last batch's later entries after
+    a completed run, then restart on the same checkpoint:
+
+    - ``before_commit_log``: the manifest holds batch N, the commit log
+      does not. The restart re-plans N and the sink skips it as already
+      committed.
+    - ``before_manifest``: batch N's data files are on disk, neither log
+      has N. The restart rewrites N into new files; the first attempt's
+      files stay on disk as orphans no manifest reader sees.
+
+    Either way every generated row is read back exactly once: user_id is
+    injective below the 1M pool period, so distinct(user_id) == count()
+    == batches in the commit log x rows per batch."""
+    rows_per_batch = 2_000
+    out = str(tmp_path / "crash_out")
+    ckpt_root = str(tmp_path / "crash_ckpt")
+    commits = os.path.join(ckpt_root, "ingest", "commits")
+    offsets = os.path.join(ckpt_root, "ingest", "offsets")
+    manifest = os.path.join(out, "_spark_metadata")
+
+    def run_until_commit(attempts: int = 3) -> None:
+        # An aged session can spend a whole window starting the query; a
+        # zero-commit run is one more restart from the same checkpoint.
+        for _ in range(attempts):
+            r = ingest.run_streaming_ingest(
+                spark,
+                output_path=out,
+                checkpoint_root=ckpt_root,
+                num_streams=2,
+                commit_after_rows=rows_per_batch,
+                timeout_ms=5_000,
+                quiet=True,
+                fixed_rows_per_batch=rows_per_batch,
+            )
+            if r.total_rows_committed > 0:
+                return
+        raise AssertionError("no batch committed in three runs")
+
+    def visible() -> set[str]:
+        """Data files a reader sees through the sink's manifest."""
+        files = spark.read.orc(out).inputFiles()
+        return {f.replace("file://", "") for f in files}
+
+    run_until_commit()
+    last = _log_ids(commits)[-1]
+    assert last in _log_ids(manifest)
+    # The stop may have interrupted batch N+1 after its offset WAL or
+    # manifest write. A crash before commit N precedes both, and recovery
+    # replays only the newest WAL batch, so drop them first.
+    _drop_log_entries(offsets, last + 1)
+    _drop_log_entries(manifest, last + 1)
+    before = visible()
+    _drop_log_entries(commits, last)
+    if crash_point == "before_manifest":
+        _drop_log_entries(manifest, last)
+    # Batch N's first-attempt files: committed before the crash, orphaned
+    # by it when the manifest entry is gone.
+    orphaned = before - visible()
+
+    run_until_commit()
+    committed = _log_ids(commits)
+    journaled = _log_ids(manifest)
+    assert committed == list(range(len(committed))), committed
+    assert committed[-1] > last  # the restart re-ran N and moved past it
+    # A stop can land between a batch's manifest entry and its commit-log
+    # entry, so the manifest may lead the commit log by that one batch.
+    assert journaled[: len(committed)] == committed
+    assert journaled == list(range(len(journaled)))
+    assert len(journaled) - len(committed) <= 1
+
+    back = spark.read.orc(out)
+    n = back.count()
+    assert n == len(journaled) * rows_per_batch
+    assert back.select("user_id").distinct().count() == n
+    after = visible()
+    if crash_point == "before_manifest":
+        assert orphaned
+        assert not orphaned & after
+        assert all(os.path.exists(f) for f in orphaned)
+    else:
+        # The sink skipped the already-journaled batch: no rewrite.
+        assert not orphaned
+        assert before <= after
 
 
 def test_streaming_ingest_foreachbatch_fallback(spark, tmp_path):
