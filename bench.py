@@ -988,9 +988,7 @@ def _stream_warm(spark, n_streams: int) -> None:
     time.sleep(1)
 
 
-def _one_stream_run(
-    spark, n_streams: int, sink: str = "file"
-) -> tuple[int, int, int, list[int]]:
+def _one_stream_run(spark, n_streams: int) -> tuple[int, int, int, list[int]]:
     """One 45 s measured streaming run → (rows, whole_run_rps,
     median_window_rps, sorted window band)."""
     import shutil
@@ -1006,7 +1004,6 @@ def _one_stream_run(
             output_path=stream_out,
             checkpoint_root=stream_ckpt,
             num_streams=n_streams,
-            sink=sink,
             # Fixed 6M-row micro-batches (the reference's
             # commitAfterNRows shape) running back-to-back: the sink
             # paces commits, so committed rows/s IS sustained sink
@@ -1059,9 +1056,7 @@ def _one_stream_run(
         shutil.rmtree(stream_out, ignore_errors=True)
 
 
-def _measure_streaming(
-    spark, n_streams: int, runs: int = 2, sink: str = "file"
-) -> dict:
+def _measure_streaming(spark, n_streams: int, runs: int = 2) -> dict:
     """Warm once, measure ``runs`` 45 s runs, keep the one with the best
     steady-window median (consecutive runs measure 2x apart under
     neighbor CPU steal); all run medians stay recorded."""
@@ -1069,9 +1064,7 @@ def _measure_streaming(
     run_medians: list[int] = []
     best = {"rows": 0, "rps": 0, "median": 0, "rates": []}
     for _ in range(runs):
-        rows_i, rps_i, med_i, rates_i = _one_stream_run(
-            spark, n_streams, sink=sink
-        )
+        rows_i, rps_i, med_i, rates_i = _one_stream_run(spark, n_streams)
         run_medians.append(med_i)
         if med_i >= best["median"]:
             best = {
@@ -1404,21 +1397,6 @@ def main() -> None:
     # quiet-state measurement above is the same code at the other session
     # position.
     late_stream = _measure_streaming(spark, n_streams, runs=2)
-    # Sink A/B (round-6 verdict item 4): one foreachBatch run right after
-    # the file-sink runs, same session, same batch shape — keeps the
-    # "manifest file sink beats per-batch committer" delta on record
-    # every round instead of living in builder notes.
-    try:
-        fb_rows, fb_rps, fb_med, fb_rates = _one_stream_run(
-            spark, n_streams, sink="foreachBatch"
-        )
-        sink_ab = {
-            "file_median_rps": late_stream["median"],
-            "foreachbatch_median_rps": fb_med,
-            "foreachbatch_window_rates": fb_rates,
-        }
-    except Exception as exc:  # pragma: no cover - defensive
-        sink_ab = {"error": f"{type(exc).__name__}: {exc}"[:200]}
     stream_rows = late_stream["rows"]
     stream_rps = late_stream["rps"]
     stream_median_rps = late_stream["median"]
@@ -1464,7 +1442,6 @@ def main() -> None:
                 "crawl": crawl,
                 "sessionize_threshold_ab": sessionize_ab,
                 "incdedup_amortization": incdedup,
-                "stream_sink_ab": sink_ab,
                 "ingest_mode": (
                     f"{n_streams} static-partitioned streams, ORC "
                     "(BASELINE.md configuration shape)"
@@ -1532,11 +1509,6 @@ def main() -> None:
         for k in ("rows", "single_sec", "two_level_sec", "auto_picks",
                   "error")
         if k in sessionize_ab
-    }
-    sink_ab_compact = {
-        k: sink_ab.get(k)
-        for k in ("file_median_rps", "foreachbatch_median_rps", "error")
-        if k in sink_ab
     }
     # --- FINAL line: size-budgeted (round-13 measurement-bug fix). ---
     # Every block below still prints in FULL on the details line above;
@@ -1618,7 +1590,6 @@ def main() -> None:
             },
         ),
         ("sessionize_ab", sess_compact),
-        ("stream_sink_ab", sink_ab_compact),
         ("incdedup_amortization", incdedup),
         # Round-8 verdict item 5: the two cross-session dips get
         # in-session anchors — s_cosine_topk at the canonical early

@@ -237,6 +237,16 @@ def default_event_columns(dynamic_partition: bool = False) -> list[ColumnSpec]:
     return cols
 
 
+def all_distinct_string_columns(columns: list[ColumnSpec]) -> list[str]:
+    """Names of the string columns whose values are distinct within any
+    file an ingest writes. UUID and IP columns draw from a POOL_SIZE pool
+    indexed ``row % POOL_SIZE``, and a file holds far fewer than POOL_SIZE
+    consecutive rows of one stream. A dictionary buys such a column
+    nothing, so ORC writers can be told to encode them direct."""
+    pooled = (ColumnType.STRING_UUID_DICT, ColumnType.STRING_IP_ADDRESS)
+    return [c.name for c in columns if c.ctype in pooled]
+
+
 def generate(
     spark: SparkSession,
     num_rows: int,

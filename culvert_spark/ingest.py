@@ -32,10 +32,11 @@ on Spark's execution model:
   and recorded as no-ops for CLI parity (SURVEY §2 Tier A dispositions).
 
 The final report mirrors the reference's output contract
-(Culvert.java:165-171):
+(Culvert.java:165-171), dividing by the seconds the run actually took
+(the last commit may land just after the timeout, see _stop_at_boundary):
 
     Total rows committed: <N>
-    Throughput: <N/timeout_s> rows/second
+    Throughput: <N/run_s> rows/second
 
 Concurrency note: the reference runs P independent writer threads against
 one Hive table; Spark's analog is ONE streaming query whose source has P
@@ -51,6 +52,7 @@ micro-batch exactly like Stream.java:199-200.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 from dataclasses import dataclass, field
@@ -60,6 +62,7 @@ from pyspark.sql import functions as F
 
 from culvert_spark.generator import (
     ColumnSpec,
+    all_distinct_string_columns,
     default_event_columns,
     generate,
     generate_stream,
@@ -257,6 +260,9 @@ class IngestReport:
     #: (defensive path only) — counted in the total, attributed to no
     #: stream rather than mis-split from a guessed base offset
     unattributed_rows: int = 0
+    #: seconds from the start of the run to its stop; None means the
+    #: nominal timeout
+    elapsed_s: float | None = None
 
     @property
     def total_rows_committed(self) -> int:
@@ -266,8 +272,8 @@ class IngestReport:
 
     @property
     def rows_per_second(self) -> int:
-        secs = max(1, self.timeout_ms // 1000)
-        return self.total_rows_committed // secs
+        secs = self.elapsed_s or self.timeout_ms / 1000
+        return int(self.total_rows_committed / max(1.0, secs))
 
     def render(self) -> str:
         lines = [
@@ -299,6 +305,82 @@ def _residue_counts(lo: int, hi: int, p: int) -> list[int]:
 
 
 _SINKS = ("file", "foreachBatch")
+
+_ORC_DIRECT = "orc.column.encoding.direct"
+
+
+@contextlib.contextmanager
+def _direct_encoding(
+    spark: SparkSession, fmt: str, columns: list[ColumnSpec]
+):
+    """Tell the ORC writers of a streaming query started in this block to
+    encode the generator's all-distinct string columns direct.
+
+    ORC feeds the first 10,000-row stride of every string column into a
+    dictionary and then drops it when the keys are nearly all distinct,
+    as they always are for these columns: a fixed 10k rows per column per
+    file of wasted work. A query clones its session's SQL conf at start
+    and copies it into the writers' Hadoop conf, so the setting is made
+    just for ``.start()`` and the caller's value (kept in the union) is
+    restored after. A ``writeStream`` option does not reach the writer."""
+    direct = all_distinct_string_columns(columns) if fmt == "orc" else []
+    if not direct:
+        yield
+        return
+    prev = spark.conf.get(_ORC_DIRECT, None)
+    keep = [c for c in (prev or "").split(",") if c]
+    spark.conf.set(_ORC_DIRECT, ",".join(dict.fromkeys(keep + direct)))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_ORC_DIRECT)
+        else:
+            spark.conf.set(_ORC_DIRECT, prev)
+
+
+#: Longest wait past the deadline for the in-flight batch to publish its
+#: progress before a query is stopped anyway.
+_STOP_WAIT_CAP_S = 30.0
+
+
+def _stop_at_boundary(queries: list) -> tuple[float, list]:
+    """Stop each query just after its next batch publishes progress.
+    Returns the monotonic time of the last stop and, per query, the
+    exception it had failed with before its stop (or None).
+
+    A batch writes its data files, commits them in the sink (the file
+    sink's manifest entry), appends its commit-log entry, and only then
+    publishes progress. A ``stop()`` that lands between the sink commit
+    and the progress leaves rows that readers see but no progress counts.
+    Right after a progress event the next batch has only just begun, far
+    from its own sink commit, so stopping there keeps the reported counts
+    equal to the table's."""
+
+    def last_id(q) -> int | None:
+        p = q.lastProgress
+        return None if p is None else p["batchId"]
+
+    pending = {i: last_id(q) for i, q in enumerate(queries)}
+    excs: list = [None] * len(queries)
+    cap = time.monotonic() + _STOP_WAIT_CAP_S
+    stopped_at = time.monotonic()
+    while pending:
+        for i, bid in list(pending.items()):
+            q = queries[i]
+            if not q.isActive or last_id(q) != bid or time.monotonic() > cap:
+                stopped_at = time.monotonic()
+                excs[i] = q.exception()
+                q.stop()
+                del pending[i]
+        if pending:
+            time.sleep(0.01)
+    for q in queries:
+        try:
+            q.awaitTermination(60)
+        except Exception:
+            pass
+    return stopped_at, excs
 
 
 def run_streaming_ingest(
@@ -336,11 +418,27 @@ def run_streaming_ingest(
     exactly-once across restarts (SURVEY §7.2). ``sink="foreachBatch"``
     keeps the explicit per-batch batch-write body for formats with no
     streaming file sink; it commits through FileOutputCommitter v1 (job
-    setup, task renames, job commit per batch). The bench's in-session
-    ``stream_sink_ab`` has the two sinks within a few percent (r14: file
-    2.269M vs foreachBatch 2.259M rows/s at 32 streams, 986k vs 947k at
-    8), so the file sink is the default for its reader-visible atomic
-    manifest, not for speed.
+    setup, task renames, job commit per batch). The last in-session sink
+    A/B had the two within a few percent (r14: file 2.269M vs foreachBatch
+    2.259M rows/s at 32 streams, 986k vs 947k at 8), so the file sink is
+    the default for its reader-visible atomic manifest, not for speed.
+
+    With ``fmt="orc"`` both sinks write the generator's all-distinct
+    string columns (user_id, page_id, ad_id, ip_address by default) direct
+    (see _direct_encoding). ORC otherwise builds a dictionary over each
+    file's first 10,000 rows of every string column and discards it for
+    these columns, which end up DIRECT_V2 anyway: a fixed trial per file
+    that is 40% of these columns' rows at 25k rows per file, 10% at
+    culvert's ``-n 100000``. The files are byte-identical either way.
+    Interleaved A/B on perfbench ``stream_txn_100k`` (local[4], 4-vCPU
+    VM, two sets of 10 pairs): median commit latency 633.8 -> 598.5 ms
+    (7/10 pairs won) and 605.5 -> 540.5 ms (8/10); traced executor CPU
+    per transaction 1,115 -> 971 and 1,110 -> 951 ms.
+
+    The run stops at a transaction boundary: after ``timeout_ms`` it waits
+    for the next batch to publish progress (at most _STOP_WAIT_CAP_S),
+    so the reported counts equal the rows read back through the manifest,
+    and the report's rate divides by the time actually run.
 
     Scale posture: committed throughput tracks source parallelism —
     in-session sweep at a constant 187.5k rows per stream-txn measured
@@ -466,25 +564,24 @@ def run_streaming_ingest(
 
     ckpt = os.path.join(checkpoint_root, "ingest")
     if sink == "file":
-        q = (
+        writer = (
             out.writeStream.format(fmt)
             .option("path", output_path)
-            .option("checkpointLocation", ckpt)
             .partitionBy("year", "month")
-            .trigger(processingTime=f"{trigger_s} seconds")
-            .start()
         )
     else:
+        writer = out.writeStream.foreachBatch(write_batch)
+    with _direct_encoding(spark, fmt, cols):
         q = (
-            out.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
             .trigger(processingTime=f"{trigger_s} seconds")
             .start()
         )
     # Timeout analog (Stream.java:217-223): wait (draining progress as
     # batches commit, so the recentProgress ring buffer can't overflow on
-    # long runs), then stop.
-    deadline = time.monotonic() + timeout_ms / 1000.0
+    # long runs), then stop at the next transaction boundary.
+    start = time.monotonic()
+    deadline = start + timeout_ms / 1000.0
     samples: list[tuple[float, int]] = []
     while time.monotonic() < deadline:
         time.sleep(min(0.5, max(0.0, deadline - time.monotonic())))
@@ -493,12 +590,7 @@ def run_streaming_ingest(
             (time.monotonic(),
              sum(s.rows_committed for s in stats) + unattributed[0])
         )
-    exc = q.exception()
-    q.stop()
-    try:
-        q.awaitTermination(60)
-    except Exception:
-        pass
+    stopped_at, (exc,) = _stop_at_boundary([q])
     drain_progress(q)
     samples.append(
         (time.monotonic(),
@@ -509,7 +601,7 @@ def run_streaming_ingest(
 
     report = IngestReport(
         timeout_ms=timeout_ms, streams=stats, samples=samples,
-        unattributed_rows=unattributed[0],
+        unattributed_rows=unattributed[0], elapsed_s=stopped_at - start,
     )
     if not quiet:
         print(report.render())
@@ -617,41 +709,38 @@ def run_streaming_ingest_multi(
                 )
 
             writer = src.writeStream.foreachBatch(write_batch)
-        q = (
-            writer.option(
-                "checkpointLocation",
-                os.path.join(checkpoint_root, f"stream-{i}"),
+        with _direct_encoding(spark, fmt, cols):
+            q = (
+                writer.option(
+                    "checkpointLocation",
+                    os.path.join(checkpoint_root, f"stream-{i}"),
+                )
+                .trigger(processingTime=f"{trigger_s} seconds")
+                .queryName(f"culvert-stream-{i}")
+                .start()
             )
-            .trigger(processingTime=f"{trigger_s} seconds")
-            .queryName(f"culvert-stream-{i}")
-            .start()
-        )
         queries.append(q)
         # The reference sleeps BETWEEN launches, including after the last
         # (Culvert.java:105-108 sleeps inside the loop body).
         if stream_launch_delay_ms and i < num_streams - 1:
             time.sleep(stream_launch_delay_ms / 1000.0)
 
-    deadline = time.monotonic() + timeout_ms / 1000.0
+    start = time.monotonic()
+    deadline = start + timeout_ms / 1000.0
     while time.monotonic() < deadline:
         time.sleep(min(0.5, max(0.0, deadline - time.monotonic())))
         for i, q in enumerate(queries):
             drain(i, q)
-    excs = [q.exception() for q in queries]
-    for q in queries:
-        q.stop()
-    for q in queries:
-        try:
-            q.awaitTermination(60)
-        except Exception:
-            pass
+    stopped_at, excs = _stop_at_boundary(queries)
     for i, q in enumerate(queries):
         drain(i, q)
     for exc in excs:
         if exc is not None:
             raise RuntimeError(f"streaming ingest query failed: {exc}")
 
-    report = IngestReport(timeout_ms=timeout_ms, streams=stats)
+    report = IngestReport(
+        timeout_ms=timeout_ms, streams=stats, elapsed_s=stopped_at - start
+    )
     if not quiet:
         print(report.render())
     return report

@@ -91,6 +91,11 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 #: instance, schema, or data is ever reused across runs — exactly one
 #: parse per distinct string per JVM gateway. Keyed on the py4j gateway so
 #: a restarted JVM (new gateway) can never see stale Java objects.
+#: One exception to "binds freshly": an aliased string (``x AS y``) parses
+#: to an Alias whose exprId is minted once, so every plan in the process
+#: reuses that id. A join of two frames that both project the same
+#: memoized alias therefore relies on the analyzer's DeduplicateRelations
+#: to re-mint the conflicting side's ids.
 _EXPR_MEMO: dict[str, Column] = {}
 _EXPR_MEMO_GATEWAY: list = [None]
 

@@ -17,6 +17,7 @@ from culvert_spark.generator import (
     EVENT_TYPES,
     ColumnSpec,
     ColumnType,
+    all_distinct_string_columns,
     default_event_columns,
     generate,
 )
@@ -204,6 +205,98 @@ def test_throughput_report_arithmetic():
     assert "Stream [stream-0] committed 921 transactions" in text
 
 
+def test_throughput_report_divides_by_time_run():
+    # The last commit can land after the deadline: the rate divides by
+    # the seconds actually run, not the nominal timeout.
+    r = ingest.IngestReport(
+        timeout_ms=60_000,
+        streams=[ingest.StreamStats("stream-0", rows_committed=1_250_000)],
+        elapsed_s=62.5,
+    )
+    assert r.rows_per_second == 20_000
+
+
+def test_all_distinct_string_columns():
+    names = ["user_id", "page_id", "ad_id", "ip_address"]
+    assert all_distinct_string_columns(default_event_columns()) == names
+    assert all_distinct_string_columns(
+        default_event_columns(dynamic_partition=True)
+    ) == names
+    custom = [
+        ColumnSpec("session_id", ColumnType.STRING_UUID_DICT),
+        ColumnSpec("color", ColumnType.STRING_DICT),
+        ColumnSpec("name", ColumnType.STRING),
+    ]
+    assert all_distinct_string_columns(custom) == ["session_id"]
+
+
+def _stripe_encodings(spark, uri: str) -> dict[str, str]:
+    """Column name -> ORC encoding kind of the file's first stripe."""
+    jvm = spark._jvm
+    orc = jvm.org.apache.orc.OrcFile
+    reader = orc.createReader(
+        jvm.org.apache.hadoop.fs.Path(uri),
+        orc.readerOptions(spark._jsc.hadoopConfiguration()),
+    )
+    rows = reader.rows()
+    try:
+        footer = rows.readStripeFooter(reader.getStripes().get(0))
+    finally:
+        rows.close()
+    names = list(reader.getSchema().getFieldNames())
+    # Column 0 is the root struct; field i is column i + 1.
+    return {
+        name: footer.getColumns(i + 1).getKind().name()
+        for i, name in enumerate(names)
+    }
+
+
+@pytest.mark.parametrize(
+    "preset,sink", [(None, "file"), ("event_type", "foreachBatch")]
+)
+def test_streaming_ingest_writes_distinct_columns_direct(
+    spark, tmp_path, preset, sink
+):
+    """The generator's all-distinct string columns are written direct, and
+    the session's ``orc.column.encoding.direct`` is left as it was.
+
+    A dictionary key threshold of 1.0 makes ORC's per-file trial keep the
+    dictionary even for all-distinct keys, so a DIRECT_V2 pooled column
+    here can only come from the direct-encoding setting. A caller's own
+    direct columns are kept alongside the generator's."""
+    key = "orc.column.encoding.direct"
+    out = str(tmp_path / "direct_out")
+    if preset is not None:
+        spark.conf.set(key, preset)
+    spark.conf.set("orc.dictionary.key.threshold", "1.0")
+    try:
+        report = ingest.run_streaming_ingest(
+            spark,
+            output_path=out,
+            checkpoint_root=str(tmp_path / "direct_ckpt"),
+            num_streams=2,
+            commit_after_rows=2_000,
+            timeout_ms=3_000,
+            quiet=True,
+            fixed_rows_per_batch=2_000,
+            sink=sink,
+        )
+        assert spark.conf.get(key, None) == preset
+    finally:
+        spark.conf.unset(key)
+        spark.conf.unset("orc.dictionary.key.threshold")
+    assert report.total_rows_committed > 0
+    files = spark.read.orc(out).inputFiles()
+    kinds = _stripe_encodings(spark, files[0])
+    direct = {"user_id", "page_id", "ad_id", "ip_address"}
+    if preset is not None:
+        direct.add(preset)
+    for name in ("user_id", "page_id", "ad_id", "ad_type", "event_type",
+                 "ip_address"):
+        want = "DIRECT_V2" if name in direct else "DICTIONARY_V2"
+        assert kinds[name] == want, kinds
+
+
 def test_streaming_ingest_smoke(spark, tmp_path):
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
@@ -279,20 +372,13 @@ def test_streaming_ingest_restart_exactly_once(spark, tmp_path):
     # Reading through the manifest shows only committed batches; every
     # run's commits are present, nothing is duplicated. THE exactly-once
     # proof is the injective-user_id distinct check below.
-    assert n >= sum(r.total_rows_committed for r in runs)
+    assert n == sum(r.total_rows_committed for r in runs)
     assert back.select("user_id").distinct().count() == n
     # Per-stream attribution survives the restarts: the reported
-    # counters (summed across all runs) must match the actual
-    # per-partition counts — month IS the stream id in static mode.
-    # One tolerated asymmetry: q.stop() can land in the window between
-    # a batch's checkpoint-commit append and its progress publication,
-    # leaving that batch committed (it IS in the data, and the next run
-    # will NOT replay it) but never visible to any run's progress drain
-    # — so counters may UNDERCOUNT by whole batches, never overcount
-    # (a replayed batch only re-emits progress when its first progress
-    # was never drained). Allow exactly that: reported <= actual per
-    # stream, with the total shortfall a whole number of 2000-row
-    # batches bounded by one stop race per run.
+    # counters (summed across all runs) match the actual per-partition
+    # counts exactly — month IS the stream id in static mode. Each run
+    # stops at a transaction boundary, so no batch reaches the manifest
+    # without its progress being counted.
     reported = {
         i: sum(r.streams[i].rows_committed for r in runs)
         for i in range(3)
@@ -303,11 +389,7 @@ def test_streaming_ingest_restart_exactly_once(spark, tmp_path):
             F.count("*").alias("cnt")
         ).collect()
     }
-    for i in range(3):
-        assert actual.get(i, 0) >= reported[i], (i, actual, reported)
-    shortfall = sum(actual.values()) - sum(reported.values())
-    assert shortfall % 2_000 == 0, (shortfall, actual, reported)
-    assert shortfall <= 2_000 * len(runs), (shortfall, actual, reported)
+    assert actual == reported
 
 
 def _log_ids(log_dir: str) -> list[int]:
@@ -383,12 +465,13 @@ def test_streaming_ingest_crash_window_recovers_exactly_once(
 
     run_until_commit()
     last = _log_ids(commits)[-1]
-    assert last in _log_ids(manifest)
-    # The stop may have interrupted batch N+1 after its offset WAL or
-    # manifest write. A crash before commit N precedes both, and recovery
-    # replays only the newest WAL batch, so drop them first.
+    # The run stops at a transaction boundary: the manifest holds exactly
+    # the committed batches.
+    assert _log_ids(manifest) == _log_ids(commits)
+    # The stop may have interrupted batch N+1 after its offset WAL write.
+    # A crash before commit N precedes it, and recovery replays only the
+    # newest WAL batch, so drop it first.
     _drop_log_entries(offsets, last + 1)
-    _drop_log_entries(manifest, last + 1)
     before = visible()
     _drop_log_entries(commits, last)
     if crash_point == "before_manifest":
@@ -402,11 +485,7 @@ def test_streaming_ingest_crash_window_recovers_exactly_once(
     journaled = _log_ids(manifest)
     assert committed == list(range(len(committed))), committed
     assert committed[-1] > last  # the restart re-ran N and moved past it
-    # A stop can land between a batch's manifest entry and its commit-log
-    # entry, so the manifest may lead the commit log by that one batch.
-    assert journaled[: len(committed)] == committed
-    assert journaled == list(range(len(journaled)))
-    assert len(journaled) - len(committed) <= 1
+    assert journaled == committed
 
     back = spark.read.orc(out)
     n = back.count()
