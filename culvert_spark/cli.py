@@ -3,7 +3,9 @@
 
 The metastore URL / db / table flags become an output path or saved-table
 name (no thrift metastore in the Spark engine); ``-b``, ``-f``, ``-s`` are
-accepted no-ops for invocation parity (SURVEY.md §2 Tier A dispositions).
+parsed for invocation parity and passed on nowhere (SURVEY.md §2 Tier A
+dispositions), as is ``-l`` without ``--multi-query``: the fused
+single-query design has no launches to stagger.
 
 Usage examples:
     python -m culvert_spark.cli -p 4 -n 100000 -e 50000 -t 30000 \
@@ -57,7 +59,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-p", "--parallelism", type=int, default=1,
                    help="number of parallel streams. default = 1")
     p.add_argument("-l", "--stream-launch-delay", type=int, default=0,
-                   help="delay in ms between launching streams. default = 0")
+                   help="delay in ms between launching streams (--multi-query; "
+                   "a parity no-op for the fused single query). default = 0")
     p.add_argument("-f", "--disable-auto-flush", action="store_true",
                    help="parity no-op (ORC auto-flush is a Hive writer "
                    "lever). default = false")
@@ -146,10 +149,6 @@ def main(argv: list[str] | None = None) -> int:
                 events_per_second=args.events_per_second,
                 timeout_ms=args.timeout,
                 dynamic_partitioning=args.enable_dynamic_partition,
-                stream_launch_delay_ms=args.stream_launch_delay,
-                transaction_batch_size=args.transaction_batch_size,
-                enable_auto_flush=not args.disable_auto_flush,
-                streaming_optimizations=not args.disable_streaming_optimization,
                 seed=args.seed,
                 buckets=args.buckets,
                 fmt=args.format,

@@ -28,8 +28,9 @@ on Spark's execution model:
   (README.md:62-63)                    repartition(32, user_id) (Spark can't
                                        bucketBy in writeStream; SURVEY §7.1)
 - txn-batch pre-allocation (-b), ORC auto-flush (-f), streaming
-  optimizations (-s) are Hive-library levers with no Spark analog — accepted
-  and recorded as no-ops for CLI parity (SURVEY §2 Tier A dispositions).
+  optimizations (-s) are Hive-library levers with no Spark analog — the
+  CLI parses them for invocation parity and passes nothing on (SURVEY §2
+  Tier A dispositions).
 
 The final report mirrors the reference's output contract
 (Culvert.java:165-171), dividing by the seconds the run actually took
@@ -43,11 +44,9 @@ one Hive table; Spark's analog is ONE streaming query whose source has P
 partitions (SURVEY §1.1 "Stream" row), NOT P concurrent queries — a
 streaming table directory has ONE ``_spark_metadata`` manifest log, which
 is single-writer by design (concurrent queries would collide on batch ids
-in it; the foreachBatch fallback likewise races on FileOutputCommitter's
-shared ``_temporary/0`` staging dir — observed: one job's cleanup deletes
-the other's task attempts). Stream i of the reference maps to the rows
-with ``row_id % P == i``; per-stream committed counts are reported per
-micro-batch exactly like Stream.java:199-200.
+in it). Stream i of the reference maps to the rows with ``row_id % P ==
+i``; per-stream committed counts are reported per micro-batch exactly like
+Stream.java:199-200.
 """
 
 from __future__ import annotations
@@ -59,6 +58,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from culvert_spark.generator import (
     ColumnSpec,
@@ -243,6 +243,12 @@ class StreamStats:
     rows_committed: int = 0
     txns_committed: int = 0
 
+    def render(self) -> str:
+        return (
+            f"Stream [{self.name}] committed {self.txns_committed} "
+            f"transactions [rows: {self.rows_committed}]"
+        )
+
 
 @dataclass
 class IngestReport:
@@ -276,11 +282,7 @@ class IngestReport:
         return int(self.total_rows_committed / max(1.0, secs))
 
     def render(self) -> str:
-        lines = [
-            f"Stream [{s.name}] committed {s.txns_committed} transactions "
-            f"[rows: {s.rows_committed}]"
-            for s in self.streams
-        ]
+        lines = [s.render() for s in self.streams]
         lines.append(f"Total rows committed: {self.total_rows_committed}")
         lines.append(f"Throughput: {self.rows_per_second} rows/second")
         return "\n".join(lines)
@@ -303,8 +305,6 @@ def _residue_counts(lo: int, hi: int, p: int) -> list[int]:
     tests/test_properties.py)."""
     return [(hi - i + p - 1) // p - (lo - i + p - 1) // p for i in range(p)]
 
-
-_SINKS = ("file", "foreachBatch")
 
 _ORC_DIRECT = "orc.column.encoding.direct"
 
@@ -383,6 +383,118 @@ def _stop_at_boundary(queries: list) -> tuple[float, list]:
     return stopped_at, excs
 
 
+_COUNTS = "stream_counts"
+
+
+def _observe_counts(src: DataFrame) -> DataFrame:
+    """Fold the committed-row counters (Stream.java:199-200) into the pass
+    that writes the batch (a groupBy-count second pass cost ~30% of the
+    batch): the batch's row count and its MEASURED base offset, min row id
+    (a checkpoint resume continues values from the prior run's offset, so
+    a tracked "starts at 0" base would misattribute rows after a restart).
+    The per-stream split is then arithmetic over the batch's contiguous
+    value range, see _run. A 32-expression count_if-per-stream observe was
+    measured costing ~15% of steady throughput (2.86-2.91M vs 3.09-3.34M
+    rows/s, addBatch 887-1057 ms vs 840-853 ms, same session) for
+    information the source contract already determines."""
+    return src.observe(
+        _COUNTS,
+        F.count(F.lit(1)).alias("n"),
+        F.min("row_id").alias("lo"),
+    )
+
+
+def _run(
+    spark: SparkSession,
+    writers: list[tuple[DataStreamWriter, str]],
+    streams_per_query: int,
+    trigger_s: float,
+    timeout_ms: int,
+    fmt: str,
+    columns: list[ColumnSpec],
+    quiet: bool,
+    launch_delay_ms: int = 0,
+) -> IngestReport:
+    """The reference run loop (Culvert.run → Stream.run → report) over
+    ``writers``, each a file-sink writer of an _observe_counts source with
+    its checkpoint directory: start the queries ``launch_delay_ms`` apart,
+    drain committed counts from their progress until ``timeout_ms`` after
+    the last start, stop each at a transaction boundary and report.
+
+    Query j covers streams [j*k, (j+1)*k) for k = ``streams_per_query``:
+    stream j*k + i holds the rows ≡ i (mod k) of each batch's contiguous
+    value range [lo, lo + n)."""
+    k = streams_per_query
+    stats = [StreamStats(name=f"stream-{i}") for i in range(len(writers) * k)]
+    report = IngestReport(timeout_ms=timeout_ms, streams=stats)
+    queries = []
+    for j, (writer, ckpt) in enumerate(writers):
+        # The reference sleeps between launches (Culvert.java:105-108).
+        # Its source is not in this repository, so this note follows the
+        # code: no sleep after the last launch, because the timeout clock
+        # starts after this loop and a trailing sleep would only add idle
+        # time.
+        if j and launch_delay_ms:
+            time.sleep(launch_delay_ms / 1000.0)
+        with _direct_encoding(spark, fmt, columns):
+            queries.append(
+                writer.option("checkpointLocation", ckpt)
+                .trigger(processingTime=f"{trigger_s} seconds")
+                .start()
+            )
+    seen: list[set[int]] = [set() for _ in queries]
+
+    def drain() -> None:
+        # A batch's progress (with its observed metrics) is published only
+        # after its sink commit — counting from progress is therefore
+        # committed-rows semantics, same as the reference.
+        for j, q in enumerate(queries):
+            for p in sorted(q.recentProgress, key=lambda p: p["batchId"]):
+                if p["batchId"] in seen[j]:
+                    continue
+                seen[j].add(p["batchId"])
+                row = (p.get("observedMetrics") or {}).get(_COUNTS)
+                if row is None:
+                    # The observe node always publishes for a data batch,
+                    # so this is defensive only — and with no measured base
+                    # offset a per-stream split would be a guess (assuming
+                    # lo=0 misattributes after a checkpoint resume, the
+                    # exact bug the observed min(row_id) base exists to
+                    # prevent). Count the rows toward the total,
+                    # unattributed.
+                    report.unattributed_rows += p["numInputRows"] or 0
+                    continue
+                if not row["n"]:
+                    continue
+                lo = row["lo"]
+                split = _residue_counts(lo, lo + row["n"], k)
+                for s, n in zip(stats[j * k:(j + 1) * k], split):
+                    if n:
+                        s.rows_committed += n
+                        s.txns_committed += 1
+                        if not quiet:
+                            print(s.render())
+        report.samples.append((time.monotonic(), report.total_rows_committed))
+
+    # Timeout analog (Stream.java:217-223): wait (draining progress as
+    # batches commit, so the recentProgress ring buffer can't overflow on
+    # long runs), then stop at the next transaction boundary.
+    start = time.monotonic()
+    deadline = start + timeout_ms / 1000.0
+    while time.monotonic() < deadline:
+        time.sleep(min(0.5, max(0.0, deadline - time.monotonic())))
+        drain()
+    stopped_at, excs = _stop_at_boundary(queries)
+    drain()
+    for exc in excs:
+        if exc is not None:
+            raise RuntimeError(f"streaming ingest query failed: {exc}")
+    report.elapsed_s = stopped_at - start
+    if not quiet:
+        print(report.render())
+    return report
+
+
 def run_streaming_ingest(
     spark: SparkSession,
     output_path: str,
@@ -392,38 +504,29 @@ def run_streaming_ingest(
     events_per_second: int = 10_000,
     timeout_ms: int = 60_000,
     dynamic_partitioning: bool = False,
-    stream_launch_delay_ms: int = 0,
-    transaction_batch_size: int = 1,  # no-op: txn ids have no Spark analog
-    enable_auto_flush: bool = True,  # no-op: Spark manages writer memory
-    streaming_optimizations: bool = True,  # no-op profile toggle
     columns: list[ColumnSpec] | None = None,
     seed: int = 42,
     buckets: int | None = None,
     fmt: str = "orc",
     quiet: bool = False,
     fixed_rows_per_batch: int | None = None,
-    sink: str = "file",
 ) -> IngestReport:
     """The full reference run loop (Culvert.startCulvert → run → report):
-    launch P rate-governed streaming queries (optionally staggered), each
-    committing a micro-batch ≈ every ``commit_after_rows`` rows, stop them
-    at ``timeout_ms``, and aggregate committed-row throughput.
+    run P rate-governed streams as the P source partitions of ONE query,
+    committing a micro-batch ≈ every ``commit_after_rows`` rows, stop it
+    at ``timeout_ms``, and aggregate committed-row throughput. P streams
+    in one query have nothing to stagger; for P *independent* queries with
+    staggered launches (CLI ``-l``), see run_streaming_ingest_multi.
 
-    Each micro-batch is one transaction. ``sink="file"`` (default) writes
-    through the native streaming file sink: tasks stream data files straight
-    into the partition directories (no ``_temporary`` staging, no rename
-    pass) and the batch commit atomically appends one ``_spark_metadata``
-    manifest entry — a partly-written batch is invisible to metadata-log
-    readers exactly like an open Hive txn, and checkpoint + manifest give
-    exactly-once across restarts (SURVEY §7.2). ``sink="foreachBatch"``
-    keeps the explicit per-batch batch-write body for formats with no
-    streaming file sink; it commits through FileOutputCommitter v1 (job
-    setup, task renames, job commit per batch). The last in-session sink
-    A/B had the two within a few percent (r14: file 2.269M vs foreachBatch
-    2.259M rows/s at 32 streams, 986k vs 947k at 8), so the file sink is
-    the default for its reader-visible atomic manifest, not for speed.
+    Each micro-batch is one transaction, committed through the native
+    streaming file sink: tasks stream data files straight into the
+    partition directories (no ``_temporary`` staging, no rename pass) and
+    the batch commit atomically appends one ``_spark_metadata`` manifest
+    entry — a partly-written batch is invisible to metadata-log readers
+    exactly like an open Hive txn, and checkpoint + manifest give
+    exactly-once across restarts (SURVEY §7.2).
 
-    With ``fmt="orc"`` both sinks write the generator's all-distinct
+    With ``fmt="orc"`` the query writes the generator's all-distinct
     string columns (user_id, page_id, ad_id, ip_address by default) direct
     (see _direct_encoding). ORC otherwise builds a dictionary over each
     file's first 10,000 rows of every string column and discards it for
@@ -452,16 +555,7 @@ def run_streaming_ingest(
     session.get_spark), queryPlanning 9-19 ms, against addBatch
     312-547 ms of row generation, ORC write and manifest append.
     """
-    del enable_auto_flush, streaming_optimizations, transaction_batch_size
-    # Fused single-query design: nothing to stagger — P streams are P source
-    # partitions of one query. For reference-shaped P *independent* queries
-    # with staggered launches (CLI -l), see run_streaming_ingest_multi.
-    del stream_launch_delay_ms
-    if sink not in _SINKS:
-        raise ValueError(f"unknown sink {sink!r}: expected one of {_SINKS}")
-    stats = [StreamStats(name=f"stream-{i}") for i in range(num_streams)]
     trigger_s = _trigger_seconds(commit_after_rows, events_per_second)
-
     cols = columns or default_event_columns(dynamic_partition=dynamic_partitioning)
     src = generate_stream(
         spark,
@@ -478,25 +572,8 @@ def run_streaming_ingest(
         # Fixed-size batches run back-to-back: the sink's sustained
         # throughput, not the offer, paces commits (see generate_stream).
         trigger_s = 0.0
-    # Committed-row counters (Stream.java:199-200) ride along with the
-    # write via TWO observed metrics folded into the same pass that writes
-    # the batch (the old groupBy-count second pass cost ~30% of the batch):
-    # the batch's row count and its MEASURED base offset (min row id — a
-    # checkpoint resume continues values from the prior run's offset, so a
-    # tracked "starts at 0" base would misattribute rows after a restart).
-    # The per-stream split is then arithmetic: stream i ↔ value ≡ i (mod P)
-    # over the batch's contiguous value range [lo, lo + n). A 32-expression
-    # count_if-per-stream observe was measured costing ~15% of steady
-    # throughput (2.86-2.91M vs 3.09-3.34M rows/s, addBatch 887-1057 ms vs
-    # 840-853 ms, same session) for information the source contract
-    # already determines.
-    src = src.observe(
-        "stream_counts",
-        F.count(F.lit(1)).alias("n"),
-        F.min("row_id").alias("lo"),
-    )
     # Reference stream i ↔ rows with row_id % P == i.
-    src = src.withColumn(
+    src = _observe_counts(src).withColumn(
         "stream_id", F.pmod(F.col("row_id"), F.lit(num_streams)).cast("int")
     ).drop("row_id")
 
@@ -513,99 +590,15 @@ def run_streaming_ingest(
         ).drop("stream_id")
     if buckets:
         out = out.repartition(buckets, F.col("user_id"))
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.format(fmt)
-            .mode("append")
-            .partitionBy("year", "month")
-            .save(output_path)
-        )
-
-    seen_batches: set[int] = set()
-    unattributed = [0]  # committed rows from batches with no observe row
-
-    def drain_progress(q) -> None:
-        # A batch's progress (with its observed metrics) is published only
-        # after its sink commit — counting from progress is therefore
-        # committed-rows semantics, same as the reference.
-        for p in sorted(q.recentProgress, key=lambda p: p["batchId"]):
-            bid = p["batchId"]
-            if bid in seen_batches:
-                continue
-            seen_batches.add(bid)
-            row = (p.get("observedMetrics") or {}).get("stream_counts")
-            if row is None:
-                # The observe node always publishes for a data batch, so
-                # this is defensive only — and with no measured base
-                # offset a per-stream split would be a guess (assuming
-                # lo=0 misattributes after a checkpoint resume, the exact
-                # bug the observed min(row_id) base exists to prevent).
-                # Count the rows toward the total, unattributed.
-                unattributed[0] += p["numInputRows"] or 0
-                continue
-            n_total = row["n"]
-            if not n_total:
-                continue
-            lo = row["lo"]
-            for i, n in enumerate(
-                _residue_counts(lo, lo + n_total, num_streams)
-            ):
-                if n:
-                    s = stats[i]
-                    s.rows_committed += n
-                    s.txns_committed += 1
-                    if not quiet:
-                        print(
-                            f"Stream [{s.name}] committed "
-                            f"{s.txns_committed} transactions "
-                            f"[rows: {s.rows_committed}]"
-                        )
-
-    ckpt = os.path.join(checkpoint_root, "ingest")
-    if sink == "file":
-        writer = (
-            out.writeStream.format(fmt)
-            .option("path", output_path)
-            .partitionBy("year", "month")
-        )
-    else:
-        writer = out.writeStream.foreachBatch(write_batch)
-    with _direct_encoding(spark, fmt, cols):
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(processingTime=f"{trigger_s} seconds")
-            .start()
-        )
-    # Timeout analog (Stream.java:217-223): wait (draining progress as
-    # batches commit, so the recentProgress ring buffer can't overflow on
-    # long runs), then stop at the next transaction boundary.
-    start = time.monotonic()
-    deadline = start + timeout_ms / 1000.0
-    samples: list[tuple[float, int]] = []
-    while time.monotonic() < deadline:
-        time.sleep(min(0.5, max(0.0, deadline - time.monotonic())))
-        drain_progress(q)
-        samples.append(
-            (time.monotonic(),
-             sum(s.rows_committed for s in stats) + unattributed[0])
-        )
-    stopped_at, (exc,) = _stop_at_boundary([q])
-    drain_progress(q)
-    samples.append(
-        (time.monotonic(),
-         sum(s.rows_committed for s in stats) + unattributed[0])
+    writer = (
+        out.writeStream.format(fmt)
+        .option("path", output_path)
+        .partitionBy("year", "month")
     )
-    if exc is not None:
-        raise RuntimeError(f"streaming ingest query failed: {exc}")
-
-    report = IngestReport(
-        timeout_ms=timeout_ms, streams=stats, samples=samples,
-        unattributed_rows=unattributed[0], elapsed_s=stopped_at - start,
+    return _run(
+        spark, [(writer, os.path.join(checkpoint_root, "ingest"))],
+        num_streams, trigger_s, timeout_ms, fmt, cols, quiet,
     )
-    if not quiet:
-        print(report.render())
-    return report
 
 
 def run_streaming_ingest_multi(
@@ -621,13 +614,13 @@ def run_streaming_ingest_multi(
     seed: int = 42,
     fmt: str = "orc",
     quiet: bool = False,
-    sink: str = "file",
 ) -> IngestReport:
     """Reference-shaped parallel ingest: P *independent* streaming queries,
     launched with a stagger of ``stream_launch_delay_ms`` between starts —
     exactly the reference's thread-launch loop (Culvert.java:105-108, CLI
     ``-l`` CulvertCLI.java:87-93) — each with its own checkpoint, its own
-    rate governor, and its own output directory.
+    rate governor, and its own output directory. The timeout clock starts
+    after the last launch.
 
     The fused single-query mode (run_streaming_ingest) is the better Spark
     design (one scheduler, shared batch clock, no committer contention) and
@@ -639,108 +632,40 @@ def run_streaming_ingest_multi(
     - separate output dirs per stream (``stream-i/``): each query commits
       through its own ``_spark_metadata`` manifest log, which is
       single-writer by design — two queries sharing one directory would
-      collide on batch ids in the shared log (and the foreachBatch
-      fallback's FileOutputCommitter races on the shared ``_temporary/0``
-      staging dir) — distinct roots make every commit private (on a
-      cluster, a DSv2/table-format sink would serialize commits instead);
+      collide on batch ids in the shared log — distinct roots make every
+      commit private (on a cluster, a DSv2/table-format sink would
+      serialize commits instead);
     - separate checkpoints: each query's commit log is its own exactly-once
       domain, so one stream restarting never replays another's batches;
     - per-stream seed offset keeps generated rows globally distinct
       (stream i generates the same deterministic stream as a reference
       writer thread with its own RNG).
     """
-    if sink not in _SINKS:
-        raise ValueError(f"unknown sink {sink!r}: expected one of {_SINKS}")
-    stats = [StreamStats(name=f"stream-{i}") for i in range(num_streams)]
-    trigger_s = _trigger_seconds(commit_after_rows, events_per_second)
     cols = columns or default_event_columns()
-
-    queries = []
-    seen: list[set[int]] = [set() for _ in range(num_streams)]
-
-    def drain(i: int, q) -> None:
-        for p in q.recentProgress:
-            bid = p["batchId"]
-            if bid in seen[i]:
-                continue
-            seen[i].add(bid)
-            row = (p.get("observedMetrics") or {}).get("committed")
-            if row is None or not row["n"]:
-                continue
-            s = stats[i]
-            s.rows_committed += row["n"]
-            s.txns_committed += 1
-            if not quiet:
-                print(
-                    f"Stream [{s.name}] committed {s.txns_committed} "
-                    f"transactions [rows: {s.rows_committed}]"
-                )
-
+    writers = []
     for i in range(num_streams):
-        src = (
-            generate_stream(
-                spark,
-                rows_per_second=events_per_second,
-                columns=cols,
-                seed=seed + i,
-                num_partitions=1,
-            )
-            .observe("committed", F.count(F.lit(1)).alias("n"))
+        src = generate_stream(
+            spark,
+            rows_per_second=events_per_second,
+            columns=cols,
+            seed=seed + i,
+            num_partitions=1,
+            keep_row_id=True,
+        )
+        out = (
+            _observe_counts(src)
+            .drop("row_id")
             .withColumn("year", F.lit(STATIC_YEAR))
             .withColumn("month", F.lit(i))
         )
-        stream_dir = os.path.join(output_path, f"stream-{i}")
-        if sink == "file":
-            writer = (
-                src.writeStream.format(fmt)
-                .option("path", stream_dir)
-                .partitionBy("year", "month")
-            )
-        else:  # foreachBatch: formats with no streaming file sink
-
-            def write_batch(
-                batch_df: DataFrame, epoch_id: int, _dest: str = stream_dir
-            ) -> None:
-                (
-                    batch_df.write.format(fmt)
-                    .mode("append")
-                    .partitionBy("year", "month")
-                    .save(_dest)
-                )
-
-            writer = src.writeStream.foreachBatch(write_batch)
-        with _direct_encoding(spark, fmt, cols):
-            q = (
-                writer.option(
-                    "checkpointLocation",
-                    os.path.join(checkpoint_root, f"stream-{i}"),
-                )
-                .trigger(processingTime=f"{trigger_s} seconds")
-                .queryName(f"culvert-stream-{i}")
-                .start()
-            )
-        queries.append(q)
-        # The reference sleeps BETWEEN launches, including after the last
-        # (Culvert.java:105-108 sleeps inside the loop body).
-        if stream_launch_delay_ms and i < num_streams - 1:
-            time.sleep(stream_launch_delay_ms / 1000.0)
-
-    start = time.monotonic()
-    deadline = start + timeout_ms / 1000.0
-    while time.monotonic() < deadline:
-        time.sleep(min(0.5, max(0.0, deadline - time.monotonic())))
-        for i, q in enumerate(queries):
-            drain(i, q)
-    stopped_at, excs = _stop_at_boundary(queries)
-    for i, q in enumerate(queries):
-        drain(i, q)
-    for exc in excs:
-        if exc is not None:
-            raise RuntimeError(f"streaming ingest query failed: {exc}")
-
-    report = IngestReport(
-        timeout_ms=timeout_ms, streams=stats, elapsed_s=stopped_at - start
+        writers.append((
+            out.writeStream.format(fmt)
+            .option("path", os.path.join(output_path, f"stream-{i}"))
+            .partitionBy("year", "month")
+            .queryName(f"culvert-stream-{i}"),
+            os.path.join(checkpoint_root, f"stream-{i}"),
+        ))
+    return _run(
+        spark, writers, 1, _trigger_seconds(commit_after_rows, events_per_second),
+        timeout_ms, fmt, cols, quiet, stream_launch_delay_ms,
     )
-    if not quiet:
-        print(report.render())
-    return report

@@ -143,11 +143,23 @@ def compact_files(
     the rename dance here is the no-catalog parquet/ORC analog, and readers
     racing the swap see the old OR the new listing, never a mix, as long as
     the filesystem renames directories atomically (local fs, HDFS do;
-    object stores need the table-format path)."""
+    object stores need the table-format path).
+
+    Raises ValueError for a streaming file sink's output (a directory with
+    ``_spark_metadata``): the rewrite would drop the sink's manifest, so
+    resuming the query from its checkpoint fails with
+    BATCH_METADATA_NOT_FOUND, and the file count would include files of
+    batches the manifest never committed."""
     import math
+    import os
     import shutil
     import uuid
 
+    if os.path.isdir(os.path.join(path, "_spark_metadata")):
+        raise ValueError(
+            f"{path} is a streaming file sink's output; compacting it "
+            "would drop its _spark_metadata manifest"
+        )
     df = read_table(spark, path, fmt=fmt)
     n_before = len(
         [f for f in _data_files(path) if not f.endswith((".crc", "_SUCCESS"))]

@@ -251,11 +251,9 @@ def _stripe_encodings(spark, uri: str) -> dict[str, str]:
     }
 
 
-@pytest.mark.parametrize(
-    "preset,sink", [(None, "file"), ("event_type", "foreachBatch")]
-)
+@pytest.mark.parametrize("preset", [None, "event_type"])
 def test_streaming_ingest_writes_distinct_columns_direct(
-    spark, tmp_path, preset, sink
+    spark, tmp_path, preset
 ):
     """The generator's all-distinct string columns are written direct, and
     the session's ``orc.column.encoding.direct`` is left as it was.
@@ -279,7 +277,6 @@ def test_streaming_ingest_writes_distinct_columns_direct(
             timeout_ms=3_000,
             quiet=True,
             fixed_rows_per_batch=2_000,
-            sink=sink,
         )
         assert spark.conf.get(key, None) == preset
     finally:
@@ -502,26 +499,44 @@ def test_streaming_ingest_crash_window_recovers_exactly_once(
         assert before <= after
 
 
-def test_streaming_ingest_foreachbatch_fallback(spark, tmp_path):
-    """sink="foreachBatch" keeps the explicit batch-write body (for formats
-    with no streaming file sink); same report contract, no manifest dir."""
-    out = str(tmp_path / "stream_out_fb")
-    ckpt = str(tmp_path / "ckpt_fb")
-    report = ingest.run_streaming_ingest(
-        spark,
+def test_compact_files_refuses_streaming_sink_dir(spark, tmp_path):
+    """compact_files on a streaming file sink's output would drop its
+    _spark_metadata manifest, and the next run on the same checkpoint
+    would fail with BATCH_METADATA_NOT_FOUND. It raises instead and leaves
+    every file as it was, so the resume still reads back exactly the rows
+    both runs reported."""
+    from culvert_spark import sources
+
+    out = str(tmp_path / "compact_out")
+    kwargs = dict(
         output_path=out,
-        checkpoint_root=ckpt,
+        checkpoint_root=str(tmp_path / "compact_ckpt"),
         num_streams=2,
         commit_after_rows=2_000,
-        events_per_second=10_000,
-        timeout_ms=6_000,
+        timeout_ms=3_000,
         quiet=True,
-        sink="foreachBatch",
+        fixed_rows_per_batch=2_000,
     )
-    assert report.total_rows_committed > 0
-    back = spark.read.orc(out)
-    assert back.count() >= report.total_rows_committed
-    assert not os.path.isdir(os.path.join(out, "_spark_metadata"))
+
+    def listing() -> dict[str, bytes]:
+        found = {}
+        for root, _dirs, files in os.walk(out):
+            for f in files:
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    found[full] = hashlib.md5(fh.read()).digest()
+        return found
+
+    first = ingest.run_streaming_ingest(spark, **kwargs)
+    before = listing()
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        sources.compact_files(spark, out, fmt="orc", target_rows_per_file=10**6)
+    assert listing() == before
+    second = ingest.run_streaming_ingest(spark, **kwargs)
+    assert second.total_rows_committed > 0
+    assert spark.read.orc(out).count() == (
+        first.total_rows_committed + second.total_rows_committed
+    )
 
 
 def test_bucketed_managed_table(spark):
@@ -577,12 +592,17 @@ def test_multi_query_streaming_stagger(spark, tmp_path):
     assert elapsed >= 0.4 + 6.0
     assert report.total_rows_committed > 0
     assert all(s.txns_committed >= 1 for s in report.streams)
+    # The shared run loop samples the multi runner's progress too.
+    assert report.samples[-1][1] == report.total_rows_committed
     # Committer isolation: one directory per stream, one checkpoint per
-    # stream (concurrent writers into one dir race on _temporary/0).
+    # stream (queries sharing one dir would collide on batch ids in its
+    # single _spark_metadata log).
     for i in range(2):
         stream_dir = os.path.join(out, f"stream-{i}")
         back = spark.read.orc(stream_dir)
-        assert back.count() >= report.streams[i].rows_committed
+        # Each query stops at a transaction boundary, so its manifest
+        # holds exactly the rows its progress reported.
+        assert back.count() == report.streams[i].rows_committed
         months = {r.month for r in back.select("month").distinct().collect()}
         assert months == {i}
         assert os.path.isdir(os.path.join(ckpt, f"stream-{i}", "commits"))
@@ -590,6 +610,28 @@ def test_multi_query_streaming_stagger(spark, tmp_path):
     a = spark.read.orc(os.path.join(out, "stream-0")).select("user_id").limit(5).collect()
     b = spark.read.orc(os.path.join(out, "stream-1")).select("user_id").limit(5).collect()
     assert a != b
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["--fixed-batches", "-b", "5", "-f", "-s"], ["--multi-query"]],
+    ids=["fused", "multi"],
+)
+def test_cli_streaming_run(spark, tmp_path, monkeypatch, flags):
+    """The CLI parses the reference's parity flags (-b, -f, -s, and -l on
+    the fused path) and starts a streaming run that commits rows."""
+    from culvert_spark import cli, session
+
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    out = str(tmp_path / "cli_out")
+    argv = ["-p", "2", "-n", "2000", "-e", "10000", "-t", "3000",
+            *flags, "-l", "100", "--output", out]
+    assert cli.main(argv) == 0
+    if "--multi-query" in flags:
+        dirs = [os.path.join(out, f"stream-{i}") for i in range(2)]
+    else:
+        dirs = [out]
+    assert sum(spark.read.orc(d).count() for d in dirs) > 0
 
 
 def test_reader_sees_only_committed_batches(spark, tmp_path):
